@@ -281,9 +281,9 @@ def bands_from_sig(
     rows_per_band: int = 2,
     carry_keys: bool = False,
 ) -> DataFrame:
-    """(doc, band, bk) from a materialized ``sig`` column — the cheap tail
-    of minhash_bands once the signature already exists (slicing an
-    8-element array, no shingle recompute).
+    """(doc, band, bk) from a materialized ``sig`` column: band key =
+    '|'-joined slice of the signature (slicing an 8-element array, no
+    shingle recompute).
 
     ``carry_keys=True`` (r14, guide §2.4) additionally carries the FULL
     band-key array as ``bks`` on every band row, which lets
@@ -307,29 +307,6 @@ def bands_from_sig(
         return sigged.select("doc", F.posexplode(keys).alias("band", "bk"))
     return sigged.select("doc", keys.alias("bks")).select(
         "doc", "bks", F.posexplode("bks").alias("band", "bk")
-    )
-
-
-def minhash_bands(
-    hashed: DataFrame, num_hashes: int = 8, rows_per_band: int = 2
-) -> DataFrame:
-    """(doc, band, bk): band key = '|'-joined slice of the signature."""
-    n_bands = num_hashes // rows_per_band
-    return hashed.select(
-        "doc", minhash_signature(F.col("hs"), num_hashes).alias("sig")
-    ).select(
-        "doc",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda i: F.concat_ws(
-                    "|",
-                    F.slice(
-                        F.col("sig"), i * rows_per_band + 1, rows_per_band
-                    ).cast("array<string>"),
-                ),
-            )
-        ).alias("band", "bk"),
     )
 
 

@@ -22,8 +22,7 @@ mode.  Delivery semantics come free from the engine's own contract:
   so foreachBatch's at-least-once replay converges to the same state —
   effectively exactly-once without any sink coordination;
 * a trigger with nothing new past the watermark is a NO-OP sync, which
-  under the partitioned layout writes zero bytes
-  (engine._write_months's empty-month fast path).
+  writes zero bytes (engine._write_months's empty-month fast path).
 
 At 100 TB the trigger stream is a metadata-only file watch (the
 trigger rows are never used); each sync's cost is the incremental

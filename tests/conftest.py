@@ -56,7 +56,6 @@ _SLOW_TESTS = {
     "test_ann_index.py::test_streaming_skew_triggers_exactly_one_retrain",
     "test_corpus_pipeline.py::test_curate_and_export_end_to_end",
     "test_corpus_pipeline.py::test_priority_keeper_policy_in_composed_pipeline",
-    "test_file_level_writes.py::test_file_level_interrupted_swap_keeps_contract",
     "test_file_level_writes.py::test_file_level_sync_rewrites_only_touched_files",
     "test_file_level_writes.py::test_lab_file_level_sync_rewrites_only_touched_files",
     "test_file_level_writes.py::test_person_retighten_cadence",
@@ -84,7 +83,7 @@ _SLOW_TESTS = {
     "test_manifest_layout.py::test_manifest_crash_with_preexisting_unbounded_month_stays_conservative",
     "test_manifest_layout.py::test_manifest_file_level_sync_carries_by_reference",
     "test_manifest_layout.py::test_manifest_gc_and_probe_pruning",
-    "test_manifest_layout.py::test_manifest_incremental_matches_rebuild_and_dir_mode",
+    "test_manifest_layout.py::test_manifest_incremental_matches_rebuild",
     "test_manifest_layout.py::test_manifest_migration_sweeps_legacy_hive_dirs",
     "test_manifest_layout.py::test_manifest_raw_path_read_sees_no_data",
     "test_manifest_layout.py::test_manifest_snapshot_retention_and_time_travel",
@@ -95,8 +94,6 @@ _SLOW_TESTS = {
     "test_manifest_layout.py::test_two_full_runs_race_end_to_end_and_converge",
     "test_manifest_layout.py::test_unreadable_snapshot_heals_under_cas",
     "test_oracle_parity.py::test_no_nonscalar_output_columns",
-    "test_partitioned.py::test_partitioned_month_swap_crash_is_rescued",
-    "test_partitioned.py::test_stale_demoted_month_dir_is_cleaned",
     "test_partitioned.py::test_sync_covers_encounter_repointed_across_person_and_month",
     "test_partitioned.py::test_sync_rewrites_only_affected_months",
     "test_partitioned_bounds.py::test_sync_probe_reads_scale_with_delta",
@@ -104,7 +101,6 @@ _SLOW_TESTS = {
     "test_pipeline.py::test_incremental_sync_catches_up",
     "test_pipeline.py::test_masked_column_advance_defeats_skip",
     "test_pipeline.py::test_noop_sync_skips_every_stage",
-    "test_pipeline.py::test_skip_recovers_demoted_old_table",
     "test_pipeline.py::test_sync_purges_voided_person",
     "test_pipeline.py::test_undated_person_void_defeats_skip",
     "test_plans.py::test_no_registry_query_plans_a_nested_loop",
@@ -120,7 +116,6 @@ _SLOW_TESTS = {
     "test_streaming.py::test_streaming_pipeline_sync_manifest_mode_crash_and_gc",
     "test_versioned.py::test_concurrent_merge_retries_and_both_land",
     "test_versioned.py::test_history_compaction_bounds_manifest",
-    "test_versioned.py::test_pipeline_versioned_layout_matches_default",
     "test_ann_index.py::test_batch_split_assignment_is_exact",
     "test_ann_index.py::test_ivf_cell_join_hot_cell_cap",
     "test_corpus_pipeline.py::test_audit_partitions_every_doc_exactly_once",
@@ -135,7 +130,6 @@ _SLOW_TESTS = {
     "test_jdbc_pipeline.py::test_stale_src_snapshot_dirs_swept_at_run_start",
     "test_layout.py::test_compact_with_zorder_restores_clustering",
     "test_oracle_parity.py::test_oracle_parity[dedup_cluster_keepers]",
-    "test_partitioned.py::test_partitioned_layout_matches_default",
     "test_partitioned_bounds.py::test_bounds_sidecar_exact_after_rebuild",
     "test_pipeline.py::test_sync_rerun_is_idempotent",
     "test_plans.py::test_ngram_jaccard_caps_hot_shingles",
@@ -152,7 +146,37 @@ _SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    modules = {}
     for item in items:
         key = f"{item.fspath.basename}::{item.name}"
+        if getattr(item, "module", None) is not None:
+            modules.setdefault(item.fspath.basename, item.module)
         if key in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # A _SLOW_TESTS key naming a test that no longer exists in its
+    # (collected) file would silently move a renamed test between tiers.
+    stale = sorted(
+        key
+        for key in _SLOW_TESTS
+        for fname, name in [key.split("::", 1)]
+        if fname in modules
+        and not hasattr(modules[fname], name.split("[", 1)[0])
+    )
+    if stale:
+        raise pytest.UsageError(
+            "tests/conftest.py _SLOW_TESTS names missing tests: "
+            + ", ".join(stale)
+        )
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    n_slow = sum(
+        1
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow")
+    )
+    if n_slow:
+        terminalreporter.write_line(
+            f"{n_slow} slow-tier tests deselected; "
+            'run the full suite with -m ""'
+        )

@@ -76,13 +76,9 @@ def main() -> None:
     spark = get_spark(app_name="encounter_bloom_probe")
     tmp = tempfile.mkdtemp(prefix="encprobe_")
     pdfs = make_sources(n_persons=n_persons, seed=11)
-    # manifest mode: the probe reader selects EXPLICIT file lists, so
-    # inputFiles() measures exactly what the probe opens (dir mode's
-    # isin month filter prunes at planning time, which inputFiles does
-    # not reflect — it lists the unpruned file index)
-    runner = PipelineRunner(
-        spark, f"{tmp}/store", partitioned=True, manifest=True
-    )
+    # the probe reader selects EXPLICIT file lists, so inputFiles()
+    # measures exactly what the probe opens
+    runner = PipelineRunner(spark, f"{tmp}/store")
     # several files per month so the file-level path is exercised
     PipelineRunner._TARGET_FILE_ROWS = 2000
     runner.run(to_spark(spark, pdfs), mode="rebuild")

@@ -10,6 +10,7 @@ all-null value rows, numeric trailing-zero cases.
 from __future__ import annotations
 
 import datetime as dt
+import os
 import random
 
 import pandas as pd
@@ -20,6 +21,7 @@ from mrsboraetl_spark.schemas import (
     OBS_SCHEMA,
     ORDERS_SCHEMA,
     PERSON_SCHEMA,
+    p_month_of,
 )
 
 BASE = dt.datetime(2024, 1, 1, 8, 0, 0)
@@ -232,4 +234,25 @@ def to_spark(spark, pdfs: dict[str, pd.DataFrame]):
                     row.append(v)
             rows.append(tuple(row))
         out[name] = spark.createDataFrame(rows, schema)
+    return out
+
+
+def with_month(runner, table):
+    """``runner.read_target(table)`` plus its storage month column: the
+    snapshot's leaf-file reads carry none."""
+    return runner.read_target(table).withColumn(
+        runner.PARTITION_COL, p_month_of(runner._PARTITION_SRC[table])
+    )
+
+
+def live_file_map(runner, table):
+    """{month: {relpath: (inode, mtime_ns, size)}} of the live snapshot."""
+    man = runner._load_manifest(table) or {"months": {}}
+    base = runner._path(table)
+    out: dict = {}
+    for m, files in man["months"].items():
+        out[m] = {}
+        for rp in files:
+            st = os.stat(os.path.join(base, rp))
+            out[m][rp] = (st.st_ino, st.st_mtime_ns, st.st_size)
     return out

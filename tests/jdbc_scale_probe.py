@@ -134,7 +134,7 @@ def run_probe(n: int) -> None:
 
     sources = {name: src(name) for name in PART_COLS}
     root = tempfile.mkdtemp(prefix="jdbc_scale_store_")
-    runner = PipelineRunner(spark, root, partitioned=True)
+    runner = PipelineRunner(spark, root)
 
     results: dict = {
         "n_persons": n,

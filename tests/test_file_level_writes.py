@@ -1,16 +1,16 @@
-"""File-level delta writes inside month directories (r9, VERDICT r8
+"""File-level delta writes inside storage months (r9, VERDICT r8
 item 2): a sync whose delta is month-LOCAL must rewrite only the
 PK-clustered files whose recorded key bounds intersect the changed-key
-set, carrying every untouched file forward by hardlink — write I/O
-scales with touched FILES, not touched months (the partitioned-layout
-lift of VersionedTable.merge_delta's per-file accounting,
+set, carrying every untouched file forward as a manifest entry — write
+I/O scales with touched FILES, not touched months (the partitioned-
+layout lift of VersionedTable.merge_delta's per-file accounting,
 sources/versioned.py:236-252; the reference's REPLACE INTO cost model
 is per-row, flat_obs_v1.0.sql:115).
 
-The month-directory swap stays the unit of atomicity — file-level only
-changes how the STAGED directory is assembled (fresh files + hardlinks),
-so the crash contract (demote _old.M -> promote -> cleanup; widened
-sidecar before swaps, exact after) is inherited unchanged.
+The snapshot flip stays the unit of atomicity — file-level only changes
+which files the new month lists name, so the crash contract (widened
+sidecar before the flip, exact after) is inherited unchanged; it is
+pinned in tests/test_manifest_layout.py.
 """
 
 from __future__ import annotations
@@ -18,35 +18,30 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-import pytest
-from pyspark.sql import functions as F
-
 from mrsboraetl_spark.engine import PipelineRunner
+from tests.fixtures import live_file_map, with_month
 
 
 def _mk_state(
     spark, tmp_path, monkeypatch, n_persons=120, seed=43, file_rows=4,
     **runner_kw,
 ):
-    """Partitioned pipeline with several files per month (small
-    maxRecordsPerFile) through rebuild + a draining sync.
-    ``runner_kw`` forwards layout flags (manifest=True for the
-    snapshot-pointer layout tests)."""
+    """Pipeline with several files per month (small maxRecordsPerFile)
+    through rebuild + a draining sync.  ``runner_kw`` forwards runner
+    options (keep_snapshots)."""
     from tests.fixtures import make_sources, to_spark
 
     monkeypatch.setattr(PipelineRunner, "_TARGET_FILE_ROWS", file_rows)
     pdfs = make_sources(n_persons=n_persons, seed=seed)
     # Clamp date_changed stragglers so a later delta is ONLY what the
-    # test injects (same clamp as delta_write_probe.py).
+    # test injects.
     enc = pdfs["encounter"].copy()
     wm = pdfs["obs"]["date_created"].max()
     late = enc["date_changed"].notna() & (enc["date_changed"] > wm)
     enc.loc[late, "date_changed"] = wm
     pdfs = dict(pdfs, encounter=enc)
     dfs = to_spark(spark, pdfs)
-    r = PipelineRunner(
-        spark, str(tmp_path / "store"), partitioned=True, **runner_kw
-    )
+    r = PipelineRunner(spark, str(tmp_path / "store"), **runner_kw)
     r.run(dfs, mode="rebuild")
     r.run(dfs, mode="sync")
     return r, pdfs
@@ -82,29 +77,13 @@ def _small_delta(pdfs):
     ))
 
 
-def _file_map(root, table):
-    """{month: {fname: (inode, mtime, size)}} of a partitioned target."""
-    out: dict = {}
-    tdir = os.path.join(root, f"{table}.parquet")
-    for d in os.listdir(tdir):
-        if not d.startswith("p_month="):
-            continue
-        m = d.split("=", 1)[1]
-        out[m] = {}
-        for f in os.listdir(os.path.join(tdir, d)):
-            if f.endswith(".parquet"):
-                st = os.stat(os.path.join(tdir, d, f))
-                out[m][f] = (st.st_ino, st.st_mtime_ns, st.st_size)
-    return out
-
-
 def test_file_level_sync_rewrites_only_touched_files(
     spark, tmp_path, monkeypatch
 ):
     from tests.fixtures import to_spark
 
     r, pdfs = _mk_state(spark, tmp_path, monkeypatch)
-    before = _file_map(r.root, "flat_obs")
+    before = live_file_map(r, "flat_obs")
     n_files_before = sum(len(v) for v in before.values())
     assert n_files_before > len(before), (
         "fixture must produce multiple files per month for the claim "
@@ -114,7 +93,7 @@ def test_file_level_sync_rewrites_only_touched_files(
     pdfs2 = _small_delta(pdfs)
     r.run(to_spark(spark, pdfs2), mode="sync")
 
-    after = _file_map(r.root, "flat_obs")
+    after = live_file_map(r, "flat_obs")
     per_month: dict = {}
     for m, files in after.items():
         c = rw = 0
@@ -126,8 +105,8 @@ def test_file_level_sync_rewrites_only_touched_files(
         per_month[m] = (c, rw)
     rewritten = sum(rw for _c, rw in per_month.values())
     # Carried-within-AFFECTED-months is the discriminating count: an
-    # untouched month's identical files prove nothing (never swapped),
-    # a swapped month keeping old inodes proves the hardlink carry.
+    # untouched month's identical files prove nothing (never rewritten),
+    # a rewritten month keeping old files proves the carry.
     carried_in_affected = sum(
         c for c, rw in per_month.values() if rw > 0
     )
@@ -144,7 +123,7 @@ def test_file_level_sync_rewrites_only_touched_files(
     # to a fresh scan-derived recompute over the live table.
     bounds = r._load_bounds("flat_obs")
     exact = r._compute_month_bounds(
-        r._path("flat_obs"), r._BOUNDS_COLS["flat_obs"]
+        with_month(r, "flat_obs"), r._BOUNDS_COLS["flat_obs"]
     )
     for m, (_c, rw) in per_month.items():
         if rw and "encounter_id" in exact.get(m, {}):
@@ -155,9 +134,7 @@ def test_file_level_sync_rewrites_only_touched_files(
 
     # Master correctness: the file-level synced state equals a fresh
     # rebuild over the same final sources.
-    rb = PipelineRunner(
-        spark, str(tmp_path / "rebuild"), partitioned=True
-    )
+    rb = PipelineRunner(spark, str(tmp_path / "rebuild"))
     rb.run(to_spark(spark, pdfs2), mode="rebuild")
     for t in ("flat_obs", "flat_orders", "flat_visit_summary"):
         cols = sorted(
@@ -185,7 +162,7 @@ def test_sidecar_file_entries_track_disk_and_are_disjoint(
     r, _ = _mk_state(spark, tmp_path, monkeypatch, n_persons=40, seed=47)
     for t in ("flat_obs", "flat_orders", "flat_visit_summary"):
         bounds = r._load_bounds(t)
-        disk = _file_map(r.root, t)
+        disk = live_file_map(r, t)
         for m, files in disk.items():
             ent = bounds.get(m, {}).get("files")
             assert ent is not None, (t, m)
@@ -198,59 +175,6 @@ def test_sidecar_file_entries_track_disk_and_are_disjoint(
                     f"{t}/{m}: overlapping file ranges "
                     f"[{lo1},{hi1}] vs [{lo2},{hi2}]"
                 )
-
-
-def test_file_level_interrupted_swap_keeps_contract(
-    spark, tmp_path, monkeypatch
-):
-    """Crash inside the swap window of a file-level delta write: the
-    widened sidecar must have DROPPED the rewritten month's file
-    entries (unknown which directory version survives), so the next
-    sync month-grain-rewrites that month instead of trusting stale
-    file bounds; recovery + re-sync converges to the rebuild state."""
-    from tests.fixtures import to_spark
-
-    r, pdfs = _mk_state(spark, tmp_path, monkeypatch, n_persons=40, seed=53)
-    pdfs2 = _small_delta(pdfs)
-
-    real_replace = os.replace
-    blown = {}
-
-    def exploding_replace(src, dst):
-        # Crash at the FIRST month-directory promote of flat_obs's
-        # delta write (demote already done -> the _old.M window).
-        if "/flat_obs.parquet/p_month=" in str(dst) and not blown:
-            blown["at"] = (src, dst)
-            raise RuntimeError("injected crash inside swap window")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(
-        "mrsboraetl_spark.engine.os.replace", exploding_replace
-    )
-    with pytest.raises(RuntimeError, match="injected crash"):
-        r.run(to_spark(spark, pdfs2), mode="sync")
-    monkeypatch.setattr("mrsboraetl_spark.engine.os.replace", real_replace)
-    assert blown, "injection never fired"
-
-    crashed_month = str(blown["at"][1]).rsplit("p_month=", 1)[1]
-    bounds = r._load_bounds("flat_obs")
-    assert "files" not in bounds.get(crashed_month, {}), (
-        "widened (pre-swap) sidecar must not carry file entries for a "
-        "month whose directory version is unknown"
-    )
-
-    # Next sync: recovery promotes/demotes as needed, then converges.
-    r.run(to_spark(spark, pdfs2), mode="sync")
-    rb = PipelineRunner(spark, str(tmp_path / "rebuild"), partitioned=True)
-    rb.run(to_spark(spark, pdfs2), mode="rebuild")
-    cols = sorted(
-        c for c in r.read_target("flat_obs").columns if c != "obs_map"
-    )
-    a = sorted(map(repr, r.read_target("flat_obs").toPandas()[cols]
-                    .itertuples(index=False)))
-    b = sorted(map(repr, rb.read_target("flat_obs").toPandas()[cols]
-                    .itertuples(index=False)))
-    assert a == b
 
 
 def test_phase2_reads_only_touched_files_plus_fallback_months(
@@ -280,7 +204,7 @@ def test_phase2_reads_only_touched_files_plus_fallback_months(
     n_selected = sum(
         len(v) for v in touched.values() if v is not None
     )
-    disk = _file_map(r.root, "flat_obs")
+    disk = live_file_map(r, "flat_obs")
     n_disk = sum(
         len(disk.get(m, {})) for m in touched
     )
@@ -306,18 +230,26 @@ def test_sidecar_file_entries_after_file_level_sync(
     r.run(to_spark(spark, pdfs2), mode="sync")
 
     bounds = r._load_bounds("flat_obs")
-    disk = _file_map(r.root, "flat_obs")
+    disk = live_file_map(r, "flat_obs")
     for m, files in disk.items():
         ent = bounds.get(m, {}).get("files")
         assert ent is not None, m
         assert sorted(ent) == sorted(files), m
-    footer = r._file_pk_stats_from_footers(
-        r._path("flat_obs"), "encounter_id"
-    )
-    assert footer is not None
-    for m, fent in footer.items():
-        for fn, st in fent.items():
-            assert bounds[m]["files"][fn] == st, (m, fn)
+    base = r._path("flat_obs")
+    live = {rp for files in disk.values() for rp in files}
+    checked = set()
+    for edir in {rp.split("/", 1)[0] for rp in live}:
+        footer = r._file_pk_stats_from_footers(
+            os.path.join(base, edir), "encounter_id"
+        )
+        assert footer is not None
+        for m, fent in footer.items():
+            for fn, st in fent.items():
+                rp = f"{edir}/p_month={m}/{fn}"
+                if rp in live:
+                    assert bounds[m]["files"][rp] == st, (m, rp)
+                    checked.add(rp)
+    assert checked == live
     # Disjointness after a file-level sync is best-effort: count the
     # overlaps so a regression in the ACCEPTED behavior (suddenly
     # overlapping everywhere) would still surface, but do not require
@@ -419,9 +351,9 @@ def test_person_retighten_cadence(spark, tmp_path, monkeypatch):
     obs4.loc[mine, "voided"] = 1
     obs4.loc[mine, "date_voided"] = wm + dt.timedelta(days=3)
     pdfs4 = dict(pdfs3, obs=obs4)
-    before = _file_map(r.root, "flat_obs")
+    before = live_file_map(r, "flat_obs")
     r.run(to_spark(spark, pdfs4), mode="sync")
-    after = _file_map(r.root, "flat_obs")
+    after = live_file_map(r, "flat_obs")
     carried_in_modal = sum(
         1
         for f, st in after.get(modal, {}).items()
@@ -447,7 +379,7 @@ def test_person_retighten_cadence(spark, tmp_path, monkeypatch):
     ) == set()
     # ...and the exact recompute matches a fresh scan-derived truth
     exact = r._compute_month_bounds(
-        r._path("flat_obs"), r._BOUNDS_COLS["flat_obs"]
+        with_month(r, "flat_obs"), r._BOUNDS_COLS["flat_obs"]
     )
     assert b3[modal]["person_id"] == exact[modal]["person_id"]
 
@@ -487,7 +419,7 @@ def test_lab_file_level_sync_rewrites_only_touched_files(
     from tests.fixtures import to_spark
 
     r, pdfs = _mk_state(spark, tmp_path, monkeypatch)
-    before = _file_map(r.root, "flat_lab_obs")
+    before = live_file_map(r, "flat_lab_obs")
     assert sum(len(v) for v in before.values()) > len(before), (
         "need multiple files per lab month"
     )
@@ -510,7 +442,7 @@ def test_lab_file_level_sync_rewrites_only_touched_files(
     ))
     r.run(to_spark(spark, pdfs2), mode="sync")
 
-    after = _file_map(r.root, "flat_lab_obs")
+    after = live_file_map(r, "flat_lab_obs")
     per_month: dict = {}
     for m, files in after.items():
         c = rw = 0
@@ -532,9 +464,7 @@ def test_lab_file_level_sync_rewrites_only_touched_files(
         per_month,
     )
 
-    rb = PipelineRunner(
-        spark, str(tmp_path / "rebuild"), partitioned=True
-    )
+    rb = PipelineRunner(spark, str(tmp_path / "rebuild"))
     rb.run(to_spark(spark, pdfs2), mode="rebuild")
     cols = sorted(r.read_target("flat_lab_obs").columns)
     a = sorted(map(repr, r.read_target("flat_lab_obs").toPandas()[cols]

@@ -63,12 +63,8 @@ def env(spark, tmp_path_factory):
 def runners(spark, env):
     """Both pipelines through rebuild + a draining sync (signals
     stored); module-scoped so later tests continue the same state."""
-    rj = PipelineRunner(
-        spark, f"{env['root']}/store_jdbc", partitioned=True
-    )
-    rp = PipelineRunner(
-        spark, f"{env['root']}/store_path", partitioned=True
-    )
+    rj = PipelineRunner(spark, f"{env['root']}/store_jdbc")
+    rp = PipelineRunner(spark, f"{env['root']}/store_path")
     rj.run(env["jdbc"], mode="rebuild")
     rj.run(env["jdbc"], mode="sync")
     rp.run(env["path"], mode="rebuild")
@@ -317,9 +313,7 @@ def test_jdbc_snapshot_staging_single_pipe_crossing(
         return real_load(self, spark_)
 
     monkeypatch.setattr(JS, "load", counting_load)
-    rs = PipelineRunner(
-        spark, str(tmp_path / "store_snap"), partitioned=True
-    )
+    rs = PipelineRunner(spark, str(tmp_path / "store_snap"))
     rs.run(snap_src, mode="rebuild")
     assert max(
         loads.count(t) for t in TABLES
@@ -334,9 +328,7 @@ def test_jdbc_snapshot_staging_single_pipe_crossing(
     assert loads == [], ("no-op sync resolved a snapshot source", loads)
 
     # identical state to the long-lived plain-JdbcSource runner
-    rj = PipelineRunner(
-        spark, f"{env['root']}/store_jdbc", partitioned=True
-    )
+    rj = PipelineRunner(spark, f"{env['root']}/store_jdbc")
     for t in (
         "flat_obs", "flat_orders", "flat_lab_obs",
         "flat_visit_summary", "flat_latest_hiv_summary",
@@ -367,7 +359,7 @@ def test_jdbc_snapshot_auto_default(spark, env, tmp_path, monkeypatch):
 
     monkeypatch.setattr(JS, "load", counting_load)
     root_auto = str(tmp_path / "store_auto")
-    ra = PipelineRunner(spark, root_auto, partitioned=True)
+    ra = PipelineRunner(spark, root_auto)
     ra.run(env["jdbc"], mode="rebuild")  # module sources: default form
     assert max(
         loads.count(t) for t in TABLES
@@ -382,7 +374,7 @@ def test_jdbc_snapshot_auto_default(spark, env, tmp_path, monkeypatch):
         for k, v in env["jdbc"].items()
     }
     root_plain = str(tmp_path / "store_plain")
-    rp = PipelineRunner(spark, root_plain, partitioned=True)
+    rp = PipelineRunner(spark, root_plain)
     rp.run(plain_src, mode="rebuild")
     assert not any(
         e.startswith("_src_snapshot_") for e in _os.listdir(root_plain)
@@ -403,7 +395,7 @@ def test_stale_src_snapshot_dirs_swept_at_run_start(
     import os as _os
 
     root = str(tmp_path / "store_sweep")
-    r = PipelineRunner(spark, root, partitioned=True)
+    r = PipelineRunner(spark, root)
     r.run(env["jdbc"], mode="rebuild")
     staged = [
         e for e in _os.listdir(root) if e.startswith("_src_snapshot_")
@@ -461,9 +453,7 @@ def test_jdbc_watermark_scoped_staging_is_o_delta(spark, tmp_path):
             url, name, properties=(("driver", DRIVER),),
             delta_key=dk, delta_cols=dc,
         )
-    rj = PipelineRunner(
-        spark, f"{tmp_path}/store_jdbc", partitioned=True
-    )
+    rj = PipelineRunner(spark, f"{tmp_path}/store_jdbc")
     rj.run(jdbc_src, mode="rebuild")
 
     # (a) append ONE obs row, sync: staged rows must be O(delta)
@@ -551,9 +541,7 @@ def test_jdbc_watermark_scoped_staging_is_o_delta(spark, tmp_path):
         p = f"{tmp_path}/pq2_{name}"
         jdbc_src[name].load(spark).write.parquet(p)
         path_src[name] = p
-    rp = PipelineRunner(
-        spark, f"{tmp_path}/store_path", partitioned=True
-    )
+    rp = PipelineRunner(spark, f"{tmp_path}/store_path")
     rp.run(path_src, mode="rebuild")
     for t in (
         "flat_obs", "flat_orders", "flat_lab_obs",

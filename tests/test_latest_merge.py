@@ -14,9 +14,9 @@ criteria:
   loses their latest row — the delete_keys half of the merge;
 * a person VOID falls back to the full-build path (unstable void set:
   the purge is queue-invisible) and still converges;
-* under the manifest layout the merge goes through
-  VersionedTable.merge_delta and REUSES untouched files (write cost
-  O(files holding queued persons), not O(table)).
+* the merge goes through VersionedTable.merge_delta and REUSES
+  untouched files (write cost O(files holding queued persons), not
+  O(table)).
 """
 
 from __future__ import annotations
@@ -53,16 +53,14 @@ def spy(monkeypatch):
     return calls
 
 
-def _base(spark, tmp_path, name, partitioned=True, **kw):
+def _base(spark, tmp_path, name, **kw):
     pdfs = make_sources(n_persons=30, seed=7)
     obs, enc = pdfs["obs"].copy(), pdfs["encounter"].copy()
     wm = obs["date_created"].max()
     late = enc["date_changed"].notna() & (enc["date_changed"] > wm)
     enc.loc[late, "date_changed"] = wm
     pdfs = dict(pdfs, obs=obs, encounter=enc)
-    r = PipelineRunner(
-        spark, str(tmp_path / name), partitioned=partitioned, **kw
-    )
+    r = PipelineRunner(spark, str(tmp_path / name), **kw)
     r.run(to_spark(spark, pdfs), mode="rebuild")
     r.run(to_spark(spark, pdfs), mode="sync")
     return r, pdfs, wm
@@ -85,7 +83,7 @@ def _new_obs_delta(pdfs, wm, days=1):
 def test_latest_merge_runs_and_matches_full_build(
     spark, tmp_path, spy
 ):
-    r, pdfs, wm = _base(spark, tmp_path, "dirmode")
+    r, pdfs, wm = _base(spark, tmp_path, "mergemode")
     latest0 = r.read_target("flat_latest_hiv_summary")
     n_persons_total = latest0.count()
     spy.clear()
@@ -155,7 +153,7 @@ def test_latest_person_void_falls_back_to_full_build(
 def test_latest_merge_manifest_reuses_files(spark, tmp_path, monkeypatch):
     # several small files so the merge has something to reuse
     monkeypatch.setattr(PipelineRunner, "_TARGET_FILE_ROWS", 4)
-    r, pdfs, wm = _base(spark, tmp_path, "manmode", manifest=True)
+    r, pdfs, wm = _base(spark, tmp_path, "manmode")
     vt = r._versioned("flat_latest_hiv_summary")
     v0 = vt.version()
 
@@ -185,17 +183,12 @@ def test_latest_merge_manifest_reuses_files(spark, tmp_path, monkeypatch):
 def test_latest_merge_versioned_layout_uses_merge_delta(
     spark, tmp_path, spy
 ):
-    """ADVICE r10: the versioned layout never set pin_recomputed, so
-    the plan never published queue_keys and _merge_latest_summary's
-    merge_delta leg was unreachable — versioned deployments silently
-    kept the full latest-table rewrite.  The engine now names
-    queue_keys in out["pin_keys"] for versioned runs.  Pins: the merge
-    commit lands as a VersionedTable 'queue merge' version whose build
-    saw only the queued person's visit rows, and the state equals an
-    independent full build."""
-    r, pdfs, wm = _base(
-        spark, tmp_path, "versmode", partitioned=False, versioned=True
-    )
+    """ADVICE r10: the latest-summary merge is reachable only when the
+    visit-summary plan publishes queue_keys (the two-phase path pins
+    it).  Pins: the merge commit lands as a VersionedTable 'queue
+    merge' version whose build saw only the queued person's visit
+    rows, and the state equals an independent full build."""
+    r, pdfs, wm = _base(spark, tmp_path, "versmode")
     vt = r._versioned("flat_latest_hiv_summary")
     v0 = vt.version()
     spy.clear()
@@ -276,15 +269,13 @@ def test_latest_merge_catchup_fraction_falls_back(
 
 
 def test_latest_table_honors_keep_snapshots(spark, tmp_path, monkeypatch):
-    """Review finding r10: the unpartitioned manifest table's vacuum was
+    """Review finding r10: the unpartitioned table's vacuum was
     hard-coded keep_last=1, silently ignoring keep_snapshots.  With
     keep_snapshots=2 the previous version of flat_latest_hiv_summary
     must survive a merge commit and stay readable (time travel), same
     contract as the partitioned tables' retained snapshots."""
     monkeypatch.setattr(PipelineRunner, "_TARGET_FILE_ROWS", 4)
-    r, pdfs, wm = _base(
-        spark, tmp_path, "keepmode", manifest=True, keep_snapshots=2
-    )
+    r, pdfs, wm = _base(spark, tmp_path, "keepmode", keep_snapshots=2)
     vt = r._versioned("flat_latest_hiv_summary")
     v0 = vt.version()
     rows_v0 = sorted(

@@ -2,21 +2,19 @@
 carry.  A partitioned target's content is a per-month FILE LIST in an
 atomic ``_snapshot.json``; data files live in immutable hidden epoch
 directories; a file-level delta's untouched files are carried forward
-as MANIFEST ENTRIES and the swap is ONE snapshot pointer flip.
+as MANIFEST ENTRIES and the commit is ONE snapshot pointer flip.
 
 The pins here are the verdict's done-criteria:
 
 * a file-level sync on a NO-HARDLINK filesystem (``os.link`` and
   ``shutil.copy2`` monkeypatched to raise) writes only touched bytes —
   carried files are never linked, copied, moved, or rewritten;
-* the crash contract survives in manifest mode (the manifest analogue
-  of test_file_level_interrupted_swap_keeps_contract): a crash at the
-  flip leaves the OLD snapshot readable and the widened sidecar free of
-  per-file entries for the affected months, and the next sync
-  converges to the rebuild state;
+* the crash contract: a crash at the flip leaves the OLD snapshot
+  readable and the widened sidecar free of per-file entries for the
+  affected months, and the next sync converges to the rebuild state;
 * replaced/orphaned files are garbage-collected; a raw
   ``spark.read.parquet(path)`` sees NO data (fail-safe, Delta-like) —
-  manifest-mode consumers read through the runner.
+  consumers read through the runner.
 """
 
 from __future__ import annotations
@@ -28,6 +26,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mrsboraetl_spark.engine import PipelineRunner
+from tests.fixtures import live_file_map
 from tests.test_file_level_writes import _mk_state, _small_delta
 
 
@@ -36,10 +35,10 @@ def _forbid_data_copies(monkeypatch):
     the operations an object store cannot do cheaply."""
 
     def no_link(src, dst, **kw):  # pragma: no cover - failure path
-        raise AssertionError(f"os.link used in manifest mode: {src}")
+        raise AssertionError(f"os.link used on a data file: {src}")
 
     def no_copy(src, dst, **kw):  # pragma: no cover - failure path
-        raise AssertionError(f"shutil.copy2 used in manifest mode: {src}")
+        raise AssertionError(f"shutil.copy2 used on a data file: {src}")
 
     monkeypatch.setattr("mrsboraetl_spark.engine.os.link", no_link)
     monkeypatch.setattr("mrsboraetl_spark.engine.shutil.copy2", no_copy)
@@ -50,19 +49,6 @@ def _manifest(runner, table):
         os.path.join(runner._path(table), runner._SNAPSHOT_FILE)
     ) as f:
         return json.load(f)
-
-
-def _live_file_map(runner, table):
-    """{month: {relpath: (inode, mtime, size)}} of the LIVE snapshot."""
-    man = _manifest(runner, table)
-    base = runner._path(table)
-    out: dict = {}
-    for m, files in man["months"].items():
-        out[m] = {}
-        for rp in files:
-            st = os.stat(os.path.join(base, rp))
-            out[m][rp] = (st.st_ino, st.st_mtime_ns, st.st_size)
-    return out
 
 
 def _rows(runner, table, drop=("obs_map",)):
@@ -84,15 +70,15 @@ def test_manifest_file_level_sync_carries_by_reference(
     from tests.fixtures import to_spark
 
     _forbid_data_copies(monkeypatch)
-    r, pdfs = _mk_state(spark, tmp_path, monkeypatch, manifest=True)
-    before = _live_file_map(r, "flat_obs")
+    r, pdfs = _mk_state(spark, tmp_path, monkeypatch)
+    before = live_file_map(r, "flat_obs")
     n_before = sum(len(v) for v in before.values())
     assert n_before > len(before), "need multiple files per month"
 
     pdfs2 = _small_delta(pdfs)
     r.run(to_spark(spark, pdfs2), mode="sync")
 
-    after = _live_file_map(r, "flat_obs")
+    after = live_file_map(r, "flat_obs")
     per_month: dict = {}
     for m, files in after.items():
         carried = rewritten = 0
@@ -121,41 +107,30 @@ def test_manifest_file_level_sync_carries_by_reference(
     ]
     assert old_epoch_refs, "no cross-epoch manifest references"
 
-    rb = PipelineRunner(
-        spark, str(tmp_path / "rebuild"), partitioned=True
-    )
+    rb = PipelineRunner(spark, str(tmp_path / "rebuild"))
     rb.run(to_spark(spark, pdfs2), mode="rebuild")
     for t in ("flat_obs", "flat_orders", "flat_visit_summary",
               "flat_lab_obs", "flat_latest_hiv_summary"):
         assert _rows(r, t) == _rows(rb, t), t
 
 
-def test_manifest_incremental_matches_rebuild_and_dir_mode(
+def test_manifest_incremental_matches_rebuild(
     spark, tmp_path, monkeypatch
 ):
-    """Master correctness across layouts: the manifest-mode incremental
-    state equals the directory-mode incremental state equals a fresh
-    rebuild, table by table."""
+    """Master correctness: the incremental state after a delta sync
+    equals a fresh rebuild over the same sources, table by table."""
     from tests.fixtures import to_spark
 
     r, pdfs = _mk_state(
-        spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
+        spark, tmp_path, monkeypatch, n_persons=40, seed=47
     )
-    rd = PipelineRunner(
-        spark, str(tmp_path / "dirmode"), partitioned=True
-    )
-    dfs = to_spark(spark, pdfs)
-    rd.run(dfs, mode="rebuild")
-    rd.run(dfs, mode="sync")
-
     pdfs2 = _small_delta(pdfs)
-    dfs2 = to_spark(spark, pdfs2)
-    r.run(dfs2, mode="sync")
-    rd.run(dfs2, mode="sync")
+    r.run(to_spark(spark, pdfs2), mode="sync")
+    rb = PipelineRunner(spark, str(tmp_path / "rebuild"))
+    rb.run(to_spark(spark, pdfs2), mode="rebuild")
     for t in ("flat_obs", "flat_orders", "flat_visit_summary",
               "flat_lab_obs", "flat_latest_hiv_summary"):
-        assert _rows(r, t) == _rows(rd, t), t
+        assert _rows(r, t) == _rows(rb, t), t
 
 
 def test_manifest_raw_path_read_sees_no_data(
@@ -166,8 +141,7 @@ def test_manifest_raw_path_read_sees_no_data(
     Delta-like contract that manifest tables are read through the
     runner."""
     r, _ = _mk_state(
-        spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
+        spark, tmp_path, monkeypatch, n_persons=40, seed=47
     )
     with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
         spark.read.parquet(r._path("flat_obs")).count()
@@ -175,9 +149,7 @@ def test_manifest_raw_path_read_sees_no_data(
 
 
 def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
-    """Manifest analogue of
-    test_file_level_interrupted_swap_keeps_contract: a crash AT the
-    snapshot flip of flat_obs's delta write leaves (a) the OLD snapshot
+    """A crash AT the snapshot flip of flat_obs's delta write leaves (a) the OLD snapshot
     as live content — the flip is all-or-nothing, there is no partial
     state to rescue — and (b) a widened sidecar whose affected months
     carry NO per-file entries (their pre-crash entries would no longer
@@ -187,8 +159,7 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
     from tests.fixtures import to_spark
 
     r, pdfs = _mk_state(
-        spark, tmp_path, monkeypatch, n_persons=40, seed=53,
-        manifest=True,
+        spark, tmp_path, monkeypatch, n_persons=40, seed=53
     )
     rows_before = _rows(r, "flat_obs")
     man_before = _manifest(r, "flat_obs")
@@ -233,7 +204,7 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
 
     # recovery: next sync converges
     r.run(to_spark(spark, pdfs2), mode="sync")
-    rb = PipelineRunner(spark, str(tmp_path / "rebuild"), partitioned=True)
+    rb = PipelineRunner(spark, str(tmp_path / "rebuild"))
     rb.run(to_spark(spark, pdfs2), mode="rebuild")
     assert _rows(r, "flat_obs") == _rows(rb, "flat_obs")
 
@@ -286,11 +257,11 @@ def test_manifest_gc_and_probe_pruning(spark, tmp_path, monkeypatch):
     listing anywhere in the read path)."""
     from tests.fixtures import to_spark
 
-    r, pdfs = _mk_state(spark, tmp_path, monkeypatch, manifest=True)
-    before = _live_file_map(r, "flat_obs")
+    r, pdfs = _mk_state(spark, tmp_path, monkeypatch)
+    before = live_file_map(r, "flat_obs")
     pdfs2 = _small_delta(pdfs)
     r.run(to_spark(spark, pdfs2), mode="sync")
-    after = _live_file_map(r, "flat_obs")
+    after = live_file_map(r, "flat_obs")
 
     base = r._path("flat_obs")
     replaced = {
@@ -352,11 +323,11 @@ def test_manifest_snapshot_retention_and_time_travel(
     _forbid_data_copies(monkeypatch)
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=2,
+        keep_snapshots=2,
     )
     e0 = _manifest(r, "flat_obs")["epoch"]
     rows_e0 = _rows(r, "flat_obs")
-    files_e0 = _live_file_map(r, "flat_obs")
+    files_e0 = live_file_map(r, "flat_obs")
 
     pdfs2 = _small_delta(pdfs)
     r.run(to_spark(spark, pdfs2), mode="sync")
@@ -387,7 +358,7 @@ def test_manifest_snapshot_retention_and_time_travel(
     # e0's replaced (exclusive) files are gone; e1's still held
     live_now = {
         rp
-        for m, files in _live_file_map(r, "flat_obs").items()
+        for m, files in live_file_map(r, "flat_obs").items()
         for rp in files
     }
     import json as _json
@@ -433,9 +404,9 @@ def test_manifest_split_reads_identical_and_carries_refs(
     _MANIFEST_SPLIT_BYTES forced to 0 every flip stores per-month
     {"ref": _man_*.json} entries instead of inline file lists.  Pins:
 
-    * the resolved state is row-identical to a directory-mode run
-      through the same rebuild -> sync -> delta-sync lifecycle (the
-      no-link/no-copy property of manifest mode itself is pinned by
+    * the resolved state after the rebuild -> sync -> delta-sync
+      lifecycle is row-identical to a fresh rebuild (the
+      no-link/no-copy property of the carry itself is pinned by
       test_manifest_file_level_sync_carries_by_reference);
     * content addressing makes the metadata carry free — a delta sync
       confined to one month REWRITES NO untouched month's manifest
@@ -450,16 +421,8 @@ def test_manifest_split_reads_identical_and_carries_refs(
 
     monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
-        spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
+        spark, tmp_path, monkeypatch, n_persons=40, seed=47
     )
-    rd = PipelineRunner(
-        spark, str(tmp_path / "dirmode"), partitioned=True
-    )
-    dfs = to_spark(spark, pdfs)
-    rd.run(dfs, mode="rebuild")
-    rd.run(dfs, mode="sync")
-
     raw0 = _raw_snapshot(r, "flat_obs")
     assert raw0["months"], "no months?"
     assert all(
@@ -472,10 +435,11 @@ def test_manifest_split_reads_identical_and_carries_refs(
     pdfs2 = _small_delta(pdfs)
     dfs2 = to_spark(spark, pdfs2)
     r.run(dfs2, mode="sync")
-    rd.run(dfs2, mode="sync")
+    rb = PipelineRunner(spark, str(tmp_path / "rebuild"))
+    rb.run(dfs2, mode="rebuild")
     for t in ("flat_obs", "flat_orders", "flat_visit_summary",
               "flat_lab_obs", "flat_latest_hiv_summary"):
-        assert _rows(r, t) == _rows(rd, t), t
+        assert _rows(r, t) == _rows(rb, t), t
 
     raw1 = _raw_snapshot(r, "flat_obs")
     resolved_after = r._load_manifest("flat_obs")["months"]
@@ -513,7 +477,7 @@ def test_manifest_split_crash_retention_and_time_travel(
     monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=2,
+        keep_snapshots=2,
     )
     e0 = _raw_snapshot(r, "flat_obs")["epoch"]
     rows_e0 = _rows(r, "flat_obs")
@@ -544,9 +508,7 @@ def test_manifest_split_crash_retention_and_time_travel(
     r.run(to_spark(spark, pdfs2), mode="sync")
     e1 = _raw_snapshot(r, "flat_obs")["epoch"]
     assert e1 > e0
-    rf = PipelineRunner(
-        spark, str(tmp_path / "fresh"), partitioned=True
-    )
+    rf = PipelineRunner(spark, str(tmp_path / "fresh"))
     rf.run(to_spark(spark, pdfs2), mode="rebuild")
     assert _rows(r, "flat_obs") == _rows(rf, "flat_obs")
 
@@ -593,8 +555,7 @@ def test_gc_protects_live_refs_when_history_missing(
     the live snapshot's manifests."""
     monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
-        spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
+        spark, tmp_path, monkeypatch, n_persons=40, seed=47
     )
     table = "flat_obs"
     rows_before = _rows(r, table)
@@ -627,8 +588,7 @@ def test_corrupt_ref_reads_as_cold_never_escapes(
     raising out of every read path."""
     monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
     r, _pdfs = _mk_state(
-        spark, tmp_path, monkeypatch, n_persons=20, seed=13,
-        manifest=True,
+        spark, tmp_path, monkeypatch, n_persons=20, seed=13
     )
     table = "flat_obs"
     base = r._path(table)
@@ -666,38 +626,44 @@ def test_corrupt_ref_reads_as_cold_never_escapes(
     assert r._load_manifest(table) is None
 
 
-def test_manifest_migration_sweeps_legacy_hive_dirs(
-    spark, tmp_path, monkeypatch
-):
-    """Review finding r10: enabling manifest=True on a table built by
-    the directory layout must not leave the pre-migration p_month=*
-    dirs live — a raw path reader would silently serve the frozen old
-    table (breaking the advertised fail-safe) and storage doubles.
-    The first manifest full write sweeps them after its flip."""
+def test_manifest_migration_sweeps_legacy_hive_dirs(spark, tmp_path):
+    """Review finding r10: a store written by the retired directory-swap
+    layout holds live p_month=* dirs (and demoted _old.* ones).  The
+    first full write must not leave them behind — a raw path reader
+    would silently serve the frozen old table (breaking the advertised
+    fail-safe) and storage doubles.  The sweep runs after the flip."""
+    from pyspark.sql import functions as F
+
     from tests.fixtures import make_sources, to_spark
 
-    monkeypatch.setattr(PipelineRunner, "_TARGET_FILE_ROWS", 4)
-    pdfs = make_sources(n_persons=20, seed=13)
-    dfs = to_spark(spark, pdfs)
     root = tmp_path / "migrate"
-    rd = PipelineRunner(spark, str(root), partitioned=True)
-    rd.run(dfs, mode="rebuild")
-    obs_dir = rd._path("flat_obs")
-    assert any(
-        e.startswith("p_month=") for e in os.listdir(obs_dir)
-    ), "dir-mode table must have hive dirs"
-    rows_before = _rows(rd, "flat_obs")
+    obs_dir = str(root / "flat_obs.parquet")
+    legacy = spark.range(6).select(
+        F.col("id").alias("encounter_id"),
+        F.when(F.col("id") < 3, "2024-01")
+        .otherwise("2024-02")
+        .alias("p_month"),
+    )
+    legacy.write.partitionBy("p_month").parquet(obs_dir)
+    os.replace(
+        os.path.join(obs_dir, "p_month=2024-02"),
+        os.path.join(obs_dir, "_old.2024-02"),
+    )
+    assert spark.read.parquet(obs_dir).count() == 3  # legacy rows live
 
-    rm = PipelineRunner(spark, str(root), partitioned=True, manifest=True)
-    rm.run(dfs, mode="rebuild")
+    r = PipelineRunner(spark, str(root))
+    r.run(to_spark(spark, make_sources(n_persons=10, seed=13)), "rebuild")
     left = [
         e for e in os.listdir(obs_dir)
-        if e.startswith(("p_month=", rm._OLD_PREFIX))
+        if e.startswith(("p_month=", r._OLD_PREFIX))
     ]
     assert left == [], left
     with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
         spark.read.parquet(obs_dir).count()
-    assert _rows(rm, "flat_obs") == rows_before
+    files = r.read_target("flat_obs").inputFiles()
+    assert files and all(
+        f"/{r._EPOCH_PREFIX}" in f for f in files
+    ), files
 
 
 def test_manifest_crash_orphan_epoch_not_time_travelable(
@@ -711,8 +677,7 @@ def test_manifest_crash_orphan_epoch_not_time_travelable(
     from tests.fixtures import to_spark
 
     r, pdfs = _mk_state(
-        spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
+        spark, tmp_path, monkeypatch, n_persons=40, seed=47
     )
     e0 = _raw_snapshot(r, "flat_obs")["epoch"]
 
@@ -759,8 +724,7 @@ def test_manifest_crash_with_preexisting_unbounded_month_stays_conservative(
     from tests.test_file_level_writes import _mk_state as _mk
 
     r, pdfs = _mk(
-        spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
+        spark, tmp_path, monkeypatch, n_persons=40, seed=47
     )
     # simulate the pre-bounds upgrade: drop sidecar + blooms entirely
     for p in (
@@ -798,9 +762,7 @@ def test_manifest_crash_with_preexisting_unbounded_month_stays_conservative(
     r.run(to_spark(spark, pdfs2), mode="sync")
     from tests.fixtures import to_spark as _ts
 
-    rf = PipelineRunner(
-        spark, str(tmp_path / "fresh_ub"), partitioned=True
-    )
+    rf = PipelineRunner(spark, str(tmp_path / "fresh_ub"))
     rf.run(_ts(spark, pdfs2), mode="rebuild")
     assert _rows(r, "flat_obs") == _rows(rf, "flat_obs")
 
@@ -820,12 +782,9 @@ def test_concurrent_flip_raises_and_preserves_winner(
     from tests.fixtures import to_spark
 
     rA, pdfs = _mk_state(
-        spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
+        spark, tmp_path, monkeypatch, n_persons=40, seed=47
     )
-    rB = PipelineRunner(
-        spark, rA.root, partitioned=True, manifest=True
-    )
+    rB = PipelineRunner(spark, rA.root)
     e0 = _raw_snapshot(rA, "flat_obs")["epoch"]
 
     real_flip = PipelineRunner._flip_manifest_dir
@@ -867,9 +826,7 @@ def test_concurrent_flip_raises_and_preserves_winner(
     # the loser re-runs against the new snapshot and converges
     rA._man_cache.clear()
     rA.run(to_spark(spark, pdfs2), mode="sync")
-    rf = PipelineRunner(
-        spark, str(tmp_path / "fresh_cc"), partitioned=True
-    )
+    rf = PipelineRunner(spark, str(tmp_path / "fresh_cc"))
     rf.run(to_spark(spark, pdfs2), mode="rebuild")
     assert _rows(rA, "flat_obs") == _rows(rf, "flat_obs")
 
@@ -889,12 +846,9 @@ def test_concurrent_flip_retries_and_both_land(
     from tests.fixtures import to_spark
 
     rA, pdfs = _mk_state(
-        spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
+        spark, tmp_path, monkeypatch, n_persons=40, seed=47
     )
-    rB = PipelineRunner(
-        spark, rA.root, partitioned=True, manifest=True
-    )
+    rB = PipelineRunner(spark, rA.root)
     e0 = _raw_snapshot(rA, "flat_obs")["epoch"]
 
     real_flip = PipelineRunner._flip_manifest_dir
@@ -926,9 +880,7 @@ def test_concurrent_flip_retries_and_both_land(
     assert e_final > fired["e_b"], (e_final, fired["e_b"])
 
     # serial-equivalent: final state == fresh rebuild on the sources
-    rf = PipelineRunner(
-        spark, str(tmp_path / "fresh_rl"), partitioned=True
-    )
+    rf = PipelineRunner(spark, str(tmp_path / "fresh_rl"))
     rf.run(to_spark(spark, pdfs2), mode="rebuild")
     for t in ("flat_obs", "flat_visit_summary",
               "flat_latest_hiv_summary"):
@@ -950,8 +902,7 @@ def test_unreadable_snapshot_heals_under_cas(
 
     monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
-        spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
+        spark, tmp_path, monkeypatch, n_persons=40, seed=47
     )
     table = "flat_obs"
     e0 = _raw_snapshot(r, table)["epoch"]
@@ -970,9 +921,7 @@ def test_unreadable_snapshot_heals_under_cas(
     e1 = _raw_snapshot(r, table)["epoch"]
     assert e1 > e0, (e1, e0)
 
-    rf = PipelineRunner(
-        spark, str(tmp_path / "fresh_heal"), partitioned=True
-    )
+    rf = PipelineRunner(spark, str(tmp_path / "fresh_heal"))
     rf.run(to_spark(spark, pdfs), mode="rebuild")
     assert _rows(r, table) == _rows(rf, table)
 
@@ -994,7 +943,7 @@ def test_pipeline_snapshot_gives_cross_table_consistent_reads(
 
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=2,
+        keep_snapshots=2,
     )
     tables = (
         "flat_obs", "flat_orders", "flat_lab_obs",
@@ -1060,9 +1009,7 @@ def test_pipeline_snapshot_gives_cross_table_consistent_reads(
     assert snap_after_crash["tables"] == snap1["tables"]
     # the map's cut is the completed run's state — recovery converges
     r.run(to_spark(spark, pdfs3), mode="sync")
-    rf = PipelineRunner(
-        spark, str(tmp_path / "fresh_ps"), partitioned=True
-    )
+    rf = PipelineRunner(spark, str(tmp_path / "fresh_ps"))
     rf.run(to_spark(spark, pdfs3), mode="rebuild")
     for t in ("flat_obs", "flat_visit_summary"):
         assert _rows(r, t) == _rows(rf, t), t
@@ -1089,12 +1036,9 @@ def test_commit_during_plan_phase_raises_then_converges(
     # still reads (the race under test is the POINTER, not retention)
     rA, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=2,
-    )
-    rB = PipelineRunner(
-        spark, rA.root, partitioned=True, manifest=True,
         keep_snapshots=2,
     )
+    rB = PipelineRunner(spark, rA.root, keep_snapshots=2)
     e0 = _raw_snapshot(rA, "flat_obs")["epoch"]
 
     real_wd = PipelineRunner._write_delta
@@ -1122,9 +1066,7 @@ def test_commit_during_plan_phase_raises_then_converges(
     monkeypatch.setattr(PipelineRunner, "_COMMIT_RETRIES", 2)
     rA._man_cache.clear()
     rA.run(to_spark(spark, pdfs2), mode="sync")
-    rf = PipelineRunner(
-        spark, str(tmp_path / "fresh_pp"), partitioned=True
-    )
+    rf = PipelineRunner(spark, str(tmp_path / "fresh_pp"))
     rf.run(to_spark(spark, pdfs2), mode="rebuild")
     for t in ("flat_obs", "flat_visit_summary",
               "flat_latest_hiv_summary"):
@@ -1146,12 +1088,9 @@ def test_pipeline_snapshot_records_own_commits_not_live_pointers(
 
     rA, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=2,
-    )
-    rB = PipelineRunner(
-        spark, rA.root, partitioned=True, manifest=True,
         keep_snapshots=2,
     )
+    rB = PipelineRunner(spark, rA.root, keep_snapshots=2)
 
     real_snap = PipelineRunner._write_pipeline_snapshot
     fired: dict = {}
@@ -1189,10 +1128,7 @@ def test_pipeline_snapshot_tolerates_non_dict_pointer(tmp_path, spark):
     """ADVICE r12 (low): a corrupt _pipeline_snapshot.json that parses
     to a list/str/number must read as None per the docstring, not
     raise AttributeError at snap.get."""
-    r = PipelineRunner(
-        spark, str(tmp_path / "store_nd"), partitioned=True,
-        manifest=True,
-    )
+    r = PipelineRunner(spark, str(tmp_path / "store_nd"))
     p = os.path.join(r.root, r._PIPELINE_SNAPSHOT_FILE)
     for garbage in ('[1, 2, 3]', '"str"', '7', '{"tables": [1]}'):
         with open(p, "w") as f:
@@ -1220,12 +1156,9 @@ def test_two_full_runs_race_end_to_end_and_converge(
 
     rA, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=3,
-    )
-    rB = PipelineRunner(
-        spark, rA.root, partitioned=True, manifest=True,
         keep_snapshots=3,
     )
+    rB = PipelineRunner(spark, rA.root, keep_snapshots=3)
     pdfs2 = _small_delta(pdfs)
     dfsA = to_spark(spark, pdfs2)
     dfsB = to_spark(spark, pdfs2)
@@ -1253,9 +1186,7 @@ def test_two_full_runs_race_end_to_end_and_converge(
     assert not errs, errs
 
     # serial-equivalent final state
-    rf = PipelineRunner(
-        spark, str(tmp_path / "fresh_race"), partitioned=True
-    )
+    rf = PipelineRunner(spark, str(tmp_path / "fresh_race"))
     rf.run(to_spark(spark, pdfs2), mode="rebuild")
     rA._man_cache.clear()
     for t in ("flat_obs", "flat_orders", "flat_lab_obs",

@@ -1,101 +1,91 @@
-"""Hive-partitioned target layout (PipelineRunner(partitioned=True)):
-month directories, equivalence with the swap layout, and — the point —
-partition pruning for date-range consumers."""
+"""Month-partitioned target layout: the layout flags are fixed, month
+directories exist, and — the point — date-range consumers read only
+the months they ask for."""
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from mrsboraetl_spark.engine import PipelineRunner
-from tests.fixtures import make_sources, to_spark
+from tests.fixtures import live_file_map, make_sources, to_spark, with_month
 
 
 @pytest.fixture(scope="module")
 def layouts(spark, tmp_path_factory):
     dfs = to_spark(spark, make_sources(n_persons=20, seed=5))
     tmp = tmp_path_factory.mktemp("partlayout")
-    plain = PipelineRunner(spark, str(tmp / "plain"))
-    plain.run(dfs, mode="rebuild")
-    part = PipelineRunner(spark, str(tmp / "part"), partitioned=True)
-    # Skip pinned off: this fixture's sync exists to run the incremental
-    # plans against the partitioned layout with an unchanged source —
-    # exactly what the stage short-circuit would (correctly) elide.
-    part._STAGE_SKIP = False
+    default = PipelineRunner(spark, str(tmp / "default"))
+    default.run(dfs, mode="rebuild")
+    part = PipelineRunner(
+        spark, str(tmp / "part"), partitioned=True, manifest=True
+    )
     part.run(dfs, mode="rebuild")
-    part.run(dfs, mode="sync")  # incremental must survive the layout
-    return dict(plain=plain, part=part)
+    return dict(default=default, part=part)
 
 
-def test_partitioned_layout_matches_default(layouts):
-    for table in ("flat_obs", "flat_visit_summary", "flat_latest_hiv_summary"):
-        a = layouts["plain"].read_target(table).toPandas()
-        b = layouts["part"].read_target(table).toPandas()
-        assert sorted(a.columns) == sorted(b.columns), table
-        cols = sorted(c for c in a.columns if c != "obs_map")
-        sa = sorted(map(tuple, a[cols].astype(str).itertuples(index=False)))
-        sb = sorted(map(tuple, b[cols].astype(str).itertuples(index=False)))
+def test_layout_flags_are_fixed(spark, tmp_path, layouts):
+    """One storage layout: the default runner and the explicit
+    partitioned+manifest runner build the same store; the retired
+    ``versioned`` flag is gone and the layout flags cannot be turned
+    off."""
+    a, b = layouts["default"], layouts["part"]
+    for table in ("flat_obs", "flat_orders", "flat_lab_obs",
+                  "flat_visit_summary"):
+        assert sorted(live_file_map(a, table)) == sorted(
+            live_file_map(b, table)
+        ), table
+    for table in ("flat_obs", "flat_visit_summary",
+                  "flat_latest_hiv_summary"):
+        da = a.read_target(table).toPandas()
+        db = b.read_target(table).toPandas()
+        cols = sorted(c for c in da.columns if c != "obs_map")
+        assert sorted(db.columns) == sorted(da.columns), table
+        sa = sorted(map(tuple, da[cols].astype(str).itertuples(index=False)))
+        sb = sorted(map(tuple, db[cols].astype(str).itertuples(index=False)))
         assert sa == sb, table
+    assert a._versioned("flat_latest_hiv_summary").version() == 0
+    assert b._versioned("flat_latest_hiv_summary").version() == 0
+    with pytest.raises(TypeError):
+        PipelineRunner(spark, str(tmp_path / "x"), versioned=True)
+    with pytest.raises(ValueError, match="one storage layout"):
+        PipelineRunner(spark, str(tmp_path / "x"), partitioned=False)
+    with pytest.raises(ValueError, match="one storage layout"):
+        PipelineRunner(spark, str(tmp_path / "x"), manifest=False)
 
 
 def test_month_directories_on_disk(layouts):
-    path = layouts["part"]._path("flat_obs")
-    subdirs = [d for d in os.listdir(path) if d.startswith("p_month=")]
-    assert len(subdirs) >= 2, subdirs  # fixture spans multiple months
+    runner = layouts["part"]
+    files = live_file_map(runner, "flat_obs")
+    assert len(files) >= 2, files  # fixture spans multiple months
+    for m, rels in files.items():
+        for rp in rels:
+            epoch_dir, month_dir, _name = rp.split("/")
+            assert epoch_dir.startswith(runner._EPOCH_PREFIX), rp
+            assert month_dir == f"p_month={m}", rp
 
 
 def test_partition_pruning_on_month_filter(spark, layouts):
-    """A month-filtered read must open only that month's files and show
-    the filter as a PartitionFilter (pruning at planning time), not a
-    row-level PushedFilter."""
-    path = layouts["part"]._path("flat_obs")
-    full = spark.read.parquet(path)
-    months = [r["p_month"] for r in full.select("p_month").distinct().collect()]
-    one = sorted(months)[0]
-    pruned = full.filter(F.col("p_month") == one)
-    # Planning-time pruning: the month predicate must land in the scan's
-    # PartitionFilters (directory pruning), not as a row-level data filter.
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan, plan
-    pf = plan.split("PartitionFilters")[1].split("]")[0]
-    assert "p_month" in pf, plan
-    # And the pruned read equals reading that month's directory directly.
-    sub = spark.read.parquet(f"{path}/p_month={one}")
-    assert pruned.count() == sub.count() > 0
-
-
-def test_partitioned_versioned_mutually_exclusive(spark, tmp_path):
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        PipelineRunner(
-            spark, str(tmp_path / "x"), versioned=True, partitioned=True
-        )
+    """A month-restricted read must open only that month's files, and
+    equal the month's rows of the whole table."""
+    runner = layouts["part"]
+    months = runner._existing_months("flat_obs")
+    one = months[0]
+    pruned = runner.read_target_months("flat_obs", [one])
+    opened = pruned.inputFiles()
+    assert opened and all(f"/p_month={one}/" in f for f in opened), opened
+    full = with_month(runner, "flat_obs")
+    assert pruned.count() == full.filter(F.col("p_month") == one).count() > 0
+    assert "p_month" not in pruned.columns
 
 
 # ----------------------------------------------- delta-scoped sync writes
 
 
-def _month_inventory(path):
-    """{month: {(relative file, mtime_ns, size)}} for every p_month dir."""
-    inv = {}
-    for d in os.listdir(path):
-        if not d.startswith("p_month="):
-            continue
-        month = d.split("=", 1)[1]
-        files = set()
-        sub = os.path.join(path, d)
-        for f in sorted(os.listdir(sub)):
-            st = os.stat(os.path.join(sub, f))
-            files.add((f, st.st_mtime_ns, st.st_size))
-        inv[month] = files
-    return inv
-
-
 def test_sync_rewrites_only_affected_months(spark, tmp_path_factory):
     """The delta-scoped writer (VERDICT r5 item 1): a sync whose delta
-    touches one month must leave every other p_month directory's files
+    touches one month must leave every other month's files
     byte-for-byte untouched (same names, mtimes, sizes) — write I/O
     scales with the delta, not the target — while final state still
     equals a plain full rebuild.
@@ -118,10 +108,9 @@ def test_sync_rewrites_only_affected_months(spark, tmp_path_factory):
     pdfs = dict(pdfs, obs=obs_pdf, encounter=enc_pdf)
     dfs = to_spark(spark, pdfs)
     root = str(tmp_path_factory.mktemp("deltapart"))
-    runner = PipelineRunner(spark, root, partitioned=True)
+    runner = PipelineRunner(spark, root)
     runner.run(dfs, mode="rebuild")
-    path = runner._path("flat_obs")
-    inv0 = _month_inventory(path)
+    inv0 = live_file_map(runner, "flat_obs")
     assert len(inv0) >= 4, "fixture must span several months"
 
     # ONE new obs on an existing encounter: the only affected month is
@@ -145,7 +134,7 @@ def test_sync_rewrites_only_affected_months(spark, tmp_path_factory):
     dfs2 = to_spark(spark, pdfs2)
     runner.run(dfs2, mode="sync")
 
-    inv1 = _month_inventory(path)
+    inv1 = live_file_map(runner, "flat_obs")
     changed = {m for m in set(inv0) | set(inv1) if inv1.get(m) != inv0.get(m)}
     assert changed == {victim_month}, (changed, victim_month)
     # State equals a plain rebuild over the final sources.
@@ -160,55 +149,10 @@ def test_sync_rewrites_only_affected_months(spark, tmp_path_factory):
         assert sa == sb, table
 
     # A no-op sync (no new changes) must write NOTHING anywhere.
-    vs_path = runner._path("flat_visit_summary")
-    inv_vs = _month_inventory(vs_path)
+    inv_vs = live_file_map(runner, "flat_visit_summary")
     runner.run(dfs2, mode="sync")
-    assert _month_inventory(path) == inv1
-    assert _month_inventory(vs_path) == inv_vs
-
-
-def test_partitioned_month_swap_crash_is_rescued(spark, tmp_path_factory):
-    """A _write_months crash between demote and promote leaves a month
-    only at _old.M (invisible to Spark's partition discovery);
-    read_target must restore it."""
-    dfs = to_spark(spark, make_sources(n_persons=10, seed=9))
-    root = str(tmp_path_factory.mktemp("crashpart"))
-    runner = PipelineRunner(spark, root, partitioned=True)
-    runner.run(dfs, mode="rebuild")
-    path = runner._path("flat_obs")
-    before = runner.read_target("flat_obs").count()
-    month_dir = sorted(
-        d for d in os.listdir(path) if d.startswith("p_month=")
-    )[0]
-    m = month_dir.split("=", 1)[1]
-    os.replace(
-        os.path.join(path, month_dir), os.path.join(path, "_old." + m)
-    )
-    # Hidden-path rule: without rescue the month would just be missing.
-    assert runner.read_target("flat_obs").count() == before
-    assert os.path.exists(os.path.join(path, month_dir))
-
-
-def test_stale_demoted_month_dir_is_cleaned(spark, tmp_path_factory):
-    """A crash AFTER a month swap's promote but before its cleanup
-    leaves a stale _old.M beside the live directory; read_target must
-    drop it (the swap provably completed) and never touch the live
-    data."""
-    dfs = to_spark(spark, make_sources(n_persons=8, seed=4))
-    root = str(tmp_path_factory.mktemp("stalepart"))
-    runner = PipelineRunner(spark, root, partitioned=True)
-    runner.run(dfs, mode="rebuild")
-    path = runner._path("flat_obs")
-    month_dir = sorted(
-        d for d in os.listdir(path) if d.startswith("p_month=")
-    )[0]
-    m = month_dir.split("=", 1)[1]
-    before = runner.read_target("flat_obs").count()
-    # Fabricate the post-promote crash artifact: a stale demoted copy.
-    os.makedirs(os.path.join(path, "_old." + m, "junk"))
-    assert runner.read_target("flat_obs").count() == before
-    assert not os.path.exists(os.path.join(path, "_old." + m))
-    assert os.path.exists(os.path.join(path, month_dir))
+    assert live_file_map(runner, "flat_obs") == inv1
+    assert live_file_map(runner, "flat_visit_summary") == inv_vs
 
 
 def test_sync_covers_encounter_repointed_across_person_and_month(
@@ -232,7 +176,7 @@ def test_sync_covers_encounter_repointed_across_person_and_month(
     dfs1 = to_spark(spark, pdfs1)
 
     runner = PipelineRunner(
-        spark, str(tmp_path_factory.mktemp("merge_part")), partitioned=True
+        spark, str(tmp_path_factory.mktemp("merge_part"))
     )
     runner.run(dfs1, mode="rebuild")
 

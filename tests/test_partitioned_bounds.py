@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mrsboraetl_spark.engine import PipelineRunner
-from tests.fixtures import make_sources, to_spark
+from tests.fixtures import make_sources, to_spark, with_month
 
 
 @pytest.fixture(scope="module")
@@ -30,7 +30,7 @@ def built(spark, tmp_path_factory):
     pdfs = dict(pdfs, obs=obs_pdf, encounter=enc_pdf)
     dfs = to_spark(spark, pdfs)
     root = str(tmp_path_factory.mktemp("bounds") / "store")
-    runner = PipelineRunner(spark, root, partitioned=True)
+    runner = PipelineRunner(spark, root)
     runner.run(dfs, mode="rebuild")
     return dict(runner=runner, pdfs=pdfs, dfs=dfs, wm=wm)
 
@@ -49,7 +49,7 @@ def test_bounds_sidecar_exact_after_rebuild(spark, built):
         F.col("encounter_id"),
     )
     actual = (
-        spark.read.parquet(runner._path("flat_obs"))
+        with_month(runner, "flat_obs")
         .groupBy("p_month")
         .agg(
             F.min(real_enc).alias("elo"),
@@ -78,7 +78,7 @@ def test_probe_reader_prunes_to_candidate_months(spark, built, monkeypatch):
     # whose range contains it; a key beyond every range reads nothing.
     from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET
 
-    target = spark.read.parquet(runner._path("flat_obs"))
+    target = with_month(runner, "flat_obs")
     row = (
         target.filter(F.col("encounter_id") < SYNTHETIC_ENCOUNTER_OFFSET)
         .select("encounter_id", "p_month")
@@ -186,7 +186,7 @@ def test_probe_reader_synthetic_key_defeats_pruning(spark, built):
         [(SYNTHETIC_ENCOUNTER_OFFSET + 5,)], "encounter_id long"
     )
     res = reader(keys, "encounter_id")
-    full = spark.read.parquet(runner._path("flat_obs")).count()
+    full = runner.read_target("flat_obs").count()
     assert res.count() == full
 
 
@@ -235,10 +235,7 @@ def test_sync_probe_reads_scale_with_delta(spark, built, monkeypatch):
 
     monkeypatch.setattr(PipelineRunner, "read_target_months", spy)
 
-    n_months_obs = len([
-        d for d in os.listdir(runner._path("flat_obs"))
-        if d.startswith("p_month=")
-    ])
+    n_months_obs = len(runner._existing_months("flat_obs"))
     runner.run(dfs2, mode="sync")
     obs_probe_months = {
         m for t, ms in probed if t == "flat_obs" for m in ms
@@ -257,18 +254,18 @@ def test_sync_probe_reads_scale_with_delta(spark, built, monkeypatch):
     assert all(ms == () for _t, ms in probed), probed
 
 
-def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
-    """Crash INSIDE the swap loop: bounds must still cover both old and
-    new month content (widen-before-swap), and the next sync converges."""
+def test_interrupted_month_swap_keeps_bounds_superset(
+    spark, built, monkeypatch
+):
+    """Crash AT the snapshot flip of a month write: bounds must still
+    cover both old and new month content (widen-before-flip), the old
+    snapshot stays live, and a clean rewrite lands exact bounds."""
     runner = built["runner"]
     table = "flat_obs"
-    path = runner._path(table)
     pre = runner._load_bounds(table)
-    target = spark.read.parquet(path)
-    months = sorted(
-        r["p_month"]
-        for r in target.select("p_month").distinct().collect()
-    )[:2]
+    man_before = runner._load_manifest(table)
+    target = with_month(runner, table)
+    months = runner._existing_months(table)[:2]
     delta = (
         target.filter(F.col("p_month").isin(months))
         # shift every key so the staged bounds differ from the old ones
@@ -276,32 +273,24 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
             "encounter_id", (F.col("encounter_id") + F.lit(7)).cast("long")
         )
         # pin: the engine always stages from SOURCE data, never from the
-        # directories it is about to swap — reading the target lazily
-        # across its own swap would re-open moved files (the documented
-        # write-over-read hazard); the checkpoint mimics the engine's
-        # source-derived input.
+        # files its own commit is about to GC — reading the target
+        # lazily across its own write would re-open deleted files; the
+        # checkpoint mimics the engine's source-derived input.
         .localCheckpoint()
     )
 
-    calls = {"n": 0}
-    orig_replace = os.replace
+    def exploding_flip(self, table_dir, man, **kw):
+        raise RuntimeError("injected crash at snapshot flip")
 
-    def exploding_replace(src, dst):
-        if f"{runner.PARTITION_COL}=" in os.path.basename(dst):
-            calls["n"] += 1
-            if calls["n"] == 2:  # first month swapped, second mid-flight
-                raise RuntimeError("injected crash between month swaps")
-        return orig_replace(src, dst)
-
-    os.replace = exploding_replace
-    try:
-        with pytest.raises(RuntimeError, match="injected crash"):
-            runner._write_months(
-                delta, path, months,
-                bounds_cols=runner._BOUNDS_COLS[table],
-            )
-    finally:
-        os.replace = orig_replace
+    monkeypatch.setattr(
+        PipelineRunner, "_flip_manifest_dir", exploding_flip
+    )
+    with pytest.raises(RuntimeError, match="injected crash"):
+        runner._write_months(
+            delta, table, months,
+            bounds_cols=runner._BOUNDS_COLS[table],
+        )
+    monkeypatch.undo()
 
     # The sidecar on disk is the WIDENED one: for the affected months it
     # must cover the old range AND the shifted range.
@@ -310,38 +299,34 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
         old_lo, old_hi = pre[m]["encounter_id"]
         assert mid[m]["encounter_id"][0] <= old_lo
         assert mid[m]["encounter_id"][1] >= old_hi + 7
-    # Recovery: read_target restores the demoted month, a clean rewrite
-    # of the same months lands exact bounds again.
-    restored = runner.read_target(table)
-    assert restored is not None
-    restored = restored.localCheckpoint()  # same hazard for the cleanup
-    leftover = [
-        d for d in os.listdir(path) if d.startswith(runner._OLD_PREFIX)
-    ]
-    assert not leftover, leftover
+    # The flip is all-or-nothing: the old snapshot is still live, and a
+    # clean rewrite of the same months lands exact bounds again.
+    assert runner._load_manifest(table) == man_before
+    restored = runner.read_target(table).localCheckpoint()
     runner._write_months(
-        delta, path, months, bounds_cols=runner._BOUNDS_COLS[table]
+        delta, table, months, bounds_cols=runner._BOUNDS_COLS[table]
     )
     post = runner._load_bounds(table)
     for m in months:
         old_lo, old_hi = pre[m]["encounter_id"]
         assert post[m]["encounter_id"] == [old_lo + 7, old_hi + 7]
     # cleanup for module-scoped fixture users: restore original content
-    runner._write(
-        restored, table
-    )
+    runner._write(restored, table)
     final = runner._load_bounds(table)
     assert set(final) >= set(pre)
 
 
 def test_bounds_file_invisible_to_spark(spark, built):
     """The underscore-prefixed sidecar (and its tmp) must never surface
-    as data or break partition discovery."""
+    as data: reads open only the snapshot's parquet files."""
     runner = built["runner"]
     path = runner._path("flat_obs")
     assert os.path.exists(os.path.join(path, "_month_bounds.json"))
-    df = spark.read.parquet(path)
-    assert "p_month" in df.columns
+    df = runner.read_target("flat_obs")
+    files = df.inputFiles()
+    assert files and all(
+        os.path.basename(f).startswith("part-") for f in files
+    ), files
     assert df.count() > 0
 
 
@@ -387,7 +372,7 @@ def test_bloom_sidecar_prunes_person_probe(spark, built):
     with open(runner._bounds_path("flat_obs")) as f:
         assert "bloom:" not in f.read()
 
-    tgt = spark.read.parquet(runner._path("flat_obs"))
+    tgt = with_month(runner, "flat_obs")
     victim = int(tgt.select("person_id").first()["person_id"])
     mine = tgt.filter(F.col("person_id") == victim)
     true_rows, true_months = (
@@ -531,7 +516,7 @@ def test_small_delta_probe_pushes_isin_to_scan(spark, built):
     exactly these keys)."""
     runner = built["runner"]
     reader = runner._make_probe_reader("flat_obs")
-    tgt = spark.read.parquet(runner._path("flat_obs"))
+    tgt = runner.read_target("flat_obs")
     victims = [
         int(r["person_id"])
         for r in tgt.select("person_id").distinct().limit(3).collect()
@@ -565,7 +550,7 @@ def test_probe_with_null_keys_neither_crashes_nor_misses(spark, built):
     collect's int(), and not defeat the valid keys' pruning."""
     runner = built["runner"]
     reader = runner._make_probe_reader("flat_obs")
-    tgt = spark.read.parquet(runner._path("flat_obs"))
+    tgt = runner.read_target("flat_obs")
     victim = int(tgt.select("person_id").first()["person_id"])
     keys = spark.createDataFrame(
         [(None,), (victim,)], "person_id long"
@@ -586,7 +571,7 @@ def test_bloom_prunes_at_production_month_cardinality(spark, tmp_path):
     carries filters up to 2^23 bits (~500k keys at 16 bits/key)."""
     import pyspark.sql.functions as SF
 
-    runner = PipelineRunner(spark, str(tmp_path / "store"), partitioned=True)
+    runner = PipelineRunner(spark, str(tmp_path / "store"))
     n = 120_000
     big = spark.range(0, n).select(
         F.lit("2024-01").alias("p_month"),
@@ -638,7 +623,7 @@ def test_bloom_build_staged_matches_collect_and_transfer(
     df = spark.createDataFrame(rows, "p_month string, person_id long")
     d = str(tmp_path / "staged")
     df.write.partitionBy("p_month").parquet(d)
-    r = PipelineRunner(spark, str(tmp_path / "store"), partitioned=True)
+    r = PipelineRunner(spark, str(tmp_path / "store"))
 
     counted = {"rows": 0}
     cls = type(df)  # the CONCRETE DataFrame class (classic/connect)
@@ -667,3 +652,23 @@ def test_bloom_build_staged_matches_collect_and_transfer(
         "oracle path no longer transfers word rows — spy broken?",
         legacy_rows,
     )
+
+
+def test_pure_carry_month_write_stages_nothing(spark, built):
+    """A delta whose affected months keep every file (it only retracted
+    rows no file holds) stages an empty epoch: the write must still
+    commit — carried files stay live, the sidecar keeps their per-file
+    entries — instead of failing to read the empty staging directory."""
+    runner = built["runner"]
+    table = "flat_obs"
+    m = runner._existing_months(table)[0]
+    before = runner._load_manifest(table)["months"]
+    files = runner._load_bounds(table)[m]["files"]
+    empty = with_month(runner, table).filter(F.lit(False))
+    runner._write_months(
+        empty, table, [m],
+        bounds_cols=runner._BOUNDS_COLS[table],
+        pk="encounter_id", carry={m: files},
+    )
+    assert runner._load_manifest(table)["months"] == before
+    assert runner._load_bounds(table)[m]["files"] == files

@@ -452,29 +452,3 @@ def test_crash_before_latest_write_reconciles_next_sync(
     expected = real_build(vs).toPandas()
     cols = sorted(c for c in expected.columns if c != "obs_map")
     assert _sorted_rows(latest, cols) == _sorted_rows(expected, cols)
-
-
-def test_skip_recovers_demoted_old_table(spark, tmp_path_factory):
-    """A stage left `.old`-demoted by a crashed whole-table swap must be
-    promoted back even on a sync that SKIPS the stage: the skip
-    short-circuit routes through _recover_fs, so external consumers
-    reading the path directly never see a missing table across
-    arbitrarily many skipping no-op syncs."""
-    import os
-
-    pdfs = make_sources(n_persons=12, seed=41)
-    dfs = to_spark(spark, pdfs)
-    root = str(tmp_path_factory.mktemp("demoted"))
-    runner = PipelineRunner(spark, root)
-    runner.run(dfs, mode="rebuild")
-    runner.run(dfs, mode="sync")  # drain stragglers; signals stored
-
-    path = runner._path("flat_orders")
-    os.replace(path, path + ".old")  # simulate crash mid-swap
-    before = runner.watermarks._read().count()
-    runner.run(dfs, mode="sync")  # pure no-op: every stage skips
-    assert os.path.exists(path), "skip must promote the demoted table"
-    assert not os.path.exists(path + ".old")
-    # Still a skip (no watermark logged), and the table reads clean.
-    assert runner.watermarks._read().count() == before
-    assert runner.read_target("flat_orders").count() > 0

@@ -163,7 +163,7 @@ def test_partitioned_engine_with_path_sources_noop_sync(
         df.write.parquet(p)
         src[name] = p
 
-    r = PipelineRunner(spark, str(tmp_path / "store"), partitioned=True)
+    r = PipelineRunner(spark, str(tmp_path / "store"))
     r.run(src, mode="rebuild")
     r.run(src, mode="sync")  # drain stragglers; signals stored
     assert r._load_bounds("flat_obs"), "partitioned rebuild writes sidecars"

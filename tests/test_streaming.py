@@ -527,10 +527,7 @@ def test_streaming_pipeline_sync_manifest_mode_crash_and_gc(
                 "append"
             ).parquet(dirs[name])
 
-    runner = PipelineRunner(
-        spark, str(tmp_path / "targets"), partitioned=True,
-        manifest=True,
-    )
+    runner = PipelineRunner(spark, str(tmp_path / "targets"))
 
     # crash the SECOND tick's flat_obs flip (first tick cold-builds)
     real_flip = PipelineRunner._flip_manifest_dir
